@@ -1,8 +1,11 @@
 package graft.meta
 
+import java.nio.ByteBuffer
+import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, Paths, StandardCopyOption, StandardOpenOption}
 import scala.jdk.CollectionConverters._
 
+import com.fasterxml.jackson.core.{JsonFactory, JsonToken}
 import org.json4s._
 import org.json4s.jackson.JsonMethods
 
@@ -51,22 +54,51 @@ object RunLedger {
   /** D3: dedupe JSONL lines by `run_id`, LAST occurrence wins; lines with
     * missing/empty ids are all kept (`_dedupe_jsonl_inplace`,
     * `utils/paths.py:75-96`). In-place rewrite, original order of the
-    * surviving lines preserved. */
+    * surviving lines preserved; blank lines are dropped. The file is left
+    * untouched when the rewrite would not change its bytes — the common
+    * case, as every run id is fresh — so a long history costs one read
+    * and one tokenizer pass per run, not a parse and a rewrite. */
   def dedupeKeepLast(ledgerPath: String): Int = {
     val p = Paths.get(ledgerPath)
     if (!Files.exists(p)) return 0
-    val lines = Files.readAllLines(p).asScala.filter(_.trim.nonEmpty).toVector
-    val keyed = lines.zipWithIndex.map { case (l, i) =>
-      val id = scala.util.Try(JsonMethods.parse(l) \ "run_id").toOption match {
-        case Some(JString(s)) if s.nonEmpty => s
-        case _ => s"__idx_$i" // empty/missing id → unique per line (paths.py:87-89)
-      }
-      (id, i, l)
+    // strict decode, as Files.readAllLines: malformed UTF-8 fails loudly
+    val text = StandardCharsets.UTF_8.newDecoder()
+      .decode(ByteBuffer.wrap(Files.readAllBytes(p))).toString
+    val lines = text.lines().iterator().asScala.filter(_.trim.nonEmpty).toVector
+    val ids = lines.zipWithIndex.map { case (l, i) =>
+      runId(l).getOrElse(s"__idx_$i") // empty/missing id → unique per line (paths.py:87-89)
     }
-    val lastIdx = keyed.groupBy(_._1).map { case (k, v) => k -> v.map(_._2).max }
-    val kept = keyed.collect { case (k, i, l) if lastIdx(k) == i => l }
-    Files.write(p, (kept.mkString("\n") + "\n").getBytes("UTF-8"))
+    val lastIdx = ids.zipWithIndex.toMap
+    val kept = lines.indices.collect { case i if lastIdx(ids(i)) == i => lines(i) }
+    val out = kept.mkString("", "\n", "\n")
+    if (out != text) Files.write(p, out.getBytes(StandardCharsets.UTF_8))
     lines.size - kept.size
+  }
+
+  private val jsonFactory = new JsonFactory()
+
+  /** The non-empty string `run_id` of one JSONL record, read with a
+    * streaming pass that skips every other value. None — the line is kept
+    * as its own key — when the line is not a JSON object, the id is
+    * missing, empty, not a string, or given more than once. */
+  private def runId(line: String): Option[String] = {
+    val parser = jsonFactory.createParser(line)
+    try {
+      if (parser.nextToken() != JsonToken.START_OBJECT) return None
+      var id: Option[String] = None
+      var seen = 0
+      while (parser.nextToken() == JsonToken.FIELD_NAME) {
+        val isId = parser.currentName() == "run_id"
+        val value = parser.nextToken()
+        if (isId) {
+          seen += 1
+          id = if (value == JsonToken.VALUE_STRING) Some(parser.getText).filter(_.nonEmpty) else None
+        } else parser.skipChildren()
+      }
+      if (parser.currentToken() == JsonToken.END_OBJECT && seen == 1) id else None
+    } catch {
+      case _: java.io.IOException => None
+    } finally parser.close()
   }
 
   /** D2: merge a legacy JSONL file into the canonical one (append lines,

@@ -29,9 +29,11 @@ object Gates {
   /** Non-empty gate: count rows, raise on 0 (`precheck_nonempty`,
     * `quality_parallel.py:54-73`). Returns the count — it feeds the drift
     * check downstream (`flows/sf_etl_orchestrator_flow.py:156-157`). */
-  def nonEmptyGate(df: DataFrame): Long = {
-    val n = df.count()
-    if (n == 0) throw new GateFailure("No data to process")
-    n
+  def nonEmptyGate(df: DataFrame): Long = nonEmptyGate(df.count())
+
+  /** The same gate over a row count the caller already has. */
+  def nonEmptyGate(rows: Long): Long = {
+    if (rows == 0) throw new GateFailure("No data to process")
+    rows
   }
 }

@@ -25,11 +25,15 @@ object SpecAggregate {
     *  4. grouped (or global) aggregate with the compiled agg list;
     *  5. sort by the FIRST group key only (`tasks/process.py:107-108`).
     */
-  def run(spark: SparkSession, spec: ObjectSpec, input: DataFrame): DataFrame = {
-    if (input.isEmpty) {
-      // Empty short-circuit: spec-derived output schema (process.py:76-87).
-      return Scan.emptyRelation(spark, SpecCompiler.emptyOutputSchema(spec))
-    }
+  def run(spark: SparkSession, spec: ObjectSpec, input: DataFrame): DataFrame =
+    if (input.isEmpty) emptyOutput(spark, spec) else aggregate(spec, input)
+
+  /** Empty short-circuit: spec-derived output schema (process.py:76-87). */
+  def emptyOutput(spark: SparkSession, spec: ObjectSpec): DataFrame =
+    Scan.emptyRelation(spark, SpecCompiler.emptyOutputSchema(spec))
+
+  /** The aggregate plan over a non-empty input (steps 1-5 of [[run]]). */
+  def aggregate(spec: ObjectSpec, input: DataFrame): DataFrame = {
     val withDerived =
       if (spec.metrics.contains(ObjectSpec.DurationHours) &&
           !input.columns.contains("duration_hours"))

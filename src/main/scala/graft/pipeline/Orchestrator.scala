@@ -9,8 +9,9 @@ import scala.concurrent.duration.Duration
 import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.util.{Failure, Success, Try}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.functions.{col, count, lit}
+import org.apache.spark.sql.types.StructType
 import org.json4s.JsonDSL._
 import org.json4s._
 
@@ -37,6 +38,28 @@ import graft.spec.{ObjectSpec, SpecRegistry}
   * Spark's scheduler interleaves the jobs. Error policy is two-tier:
   * ETL failures always raise, QA failures are advisory unless
   * `failOnQaError` (`flow:91,163-171`).
+  *
+  * Spark jobs of one parquet-mode object run, each labelled with its
+  * task's name (the job description), and the reference contract that
+  * keeps each one (a two-stage query is two jobs under adaptive
+  * execution):
+  *  - `extract`: the raw write (`extract.py:99`); it counts its own rows,
+  *    and that count is the non-empty gate's, the drift check's and the
+  *    aggregate's empty test (`quality_parallel.py:54-73,159-189`,
+  *    `process.py:76-87`). The read-back supplies the written schema.
+  *  - `process`: the aggregate and its single-file CSV (`process.py:110`).
+  *  - `load_json`: the schema-inferring re-read of the processed CSV, its
+  *    empty test and the records collect (`load.py:62-84` — the types
+  *    are the inferred ones, as the reference's).
+  *  - `dedup`: the keep-first CSV (`quality_parallel.py:76-101`).
+  *  - `profile`: one frequency-table query (`quality_parallel.py:105-140`).
+  *  - `snapshot_parquet`: the parquet snapshot (`quality_parallel.py:143-156`).
+  *  - `recordMetadata`: the raw and processed recounts from disk, read with
+  *    known schemas (`metadata.py:195-197`).
+  *
+  * The schema gate and drift launch none. With `rawFormat = "csv"` the
+  * raw read-back and its recount keep schema inference: that is the
+  * reference's typing (`process.py:72`).
   */
 object Orchestrator {
 
@@ -71,7 +94,11 @@ object Orchestrator {
       rawRows: Long,
       processedRows: Long,
       jsonRecords: Long,
-      durationSeconds: Double)
+      durationSeconds: Double,
+      /** Schemas of the raw hand-off and the processed summary, so the
+        * ledger's recounts read them without inferring either. */
+      rawSchema: StructType,
+      processedSchema: StructType)
 
   /** Simple bounded retry (≙ Prefect task retries, `extract.py:61-62`,
     * `process.py:56`). */
@@ -147,13 +174,13 @@ object Orchestrator {
 
     val states = scala.collection.concurrent.TrieMap.empty[String, String]
     def recordState[T](name: String)(body: => T): T =
-      Try(body) match {
+      Try(labelled(spark, name)(body)) match {
         case Success(v) => states(name) = "COMPLETED"; v
         case Failure(e) => states(name) = "FAILED"; throw e
       }
 
     // ---- extract once (S1-S4; retried 3×10s ≙ extract.py:61-62) ----
-    val raw = recordState("extract") {
+    val (raw, rawRows) = recordState("extract") {
       val scanned = Scan.specScan(source, spec, opts.limit)
       if (opts.rawFormat == "csv") {
         // fail fast (outside the retry — deterministic) on schemas the
@@ -167,22 +194,31 @@ object Orchestrator {
           s"rawFormat=csv supports flat schemas only; non-atomic columns: ${complex.mkString(", ")}")
       }
       retry(3, opts.extractRetryDelayMs) {
-        // raw materialization: the file hand-off both branches read back
-        if (opts.rawFormat == "csv") {
-          Sinks.csv(Normalize.temporalsToString(scanned), rawPath)
-          Scan.csv(spark, rawPath, scanned.schema)
-        } else {
-          Sinks.parquetSnappy(scanned, rawPath)
-          spark.read.parquet(rawPath)
-        }
+        // raw materialization: the file hand-off both branches read back.
+        // The write counts its own rows — the count the gate, the drift
+        // check and the aggregate's empty test need; an Observation
+        // completes once, so each attempt gets its own.
+        val written = Observation("raw_rows")
+        def counted(df: DataFrame) = df.observe(written, count(lit(1)).as("rows"))
+        val readBack =
+          if (opts.rawFormat == "csv") {
+            Sinks.csv(counted(Normalize.temporalsToString(scanned)), rawPath)
+            Scan.csv(spark, rawPath, scanned.schema)
+          } else {
+            Sinks.parquetSnappy(counted(scanned), rawPath)
+            spark.read.schema(scanned.schema).parquet(rawPath)
+          }
+        (readBack, written.get("rows").asInstanceOf[Long])
       }
     }
 
     // ---- ETL branch (strict; process retried 2×5s ≙ process.py:56) ----
-    val etl: Future[(Long, Long)] = Future {
+    val etl: Future[(Long, StructType)] = Future {
       val processed = recordState("process") {
         retry(2, opts.processRetryDelayMs) {
-          val out = SpecAggregate.run(spark, spec, raw)
+          val out =
+            if (rawRows == 0) SpecAggregate.emptyOutput(spark, spec)
+            else SpecAggregate.aggregate(spec, raw)
           Sinks.csv(out, paths("processed_csv"), singleFile = true)
           out
         }
@@ -197,7 +233,7 @@ object Orchestrator {
       }
       // processed row count == JSON record count by construction (same
       // artifact, just collected) — don't relaunch the aggregate job
-      (n, n)
+      (n, processed.schema)
     }(etlEc)
 
     // ---- QA branch (advisory; ≙ flow:145-157) ----
@@ -207,7 +243,7 @@ object Orchestrator {
     // inner futures need.
     val qaEc = ExecutionContext.fromExecutorService(
       Executors.newFixedThreadPool(math.max(opts.qaParallelism, 1), daemonFactory))
-    val qa: Future[(Map[String, Try[String]], Option[String], Long)] = Future {
+    val qa: Future[(Map[String, Try[String]], Option[String])] = Future {
       states("start_gate") = "COMPLETED" // Q1: no-op barrier
       val schemaF = Future(recordState("precheck_schema") {
         val report = Gates.schemaGate(raw, spec.requiredCols)
@@ -218,7 +254,7 @@ object Orchestrator {
         report
       })(qaEc)
       val nonEmptyF = Future(recordState("precheck_nonempty") {
-        Gates.nonEmptyGate(raw)
+        Gates.nonEmptyGate(rawRows)
       })(qaEc)
       val schema = Await.result(schemaF, Duration.Inf)
       val rows = Await.result(nonEmptyF, Duration.Inf)
@@ -264,42 +300,58 @@ object Orchestrator {
       val drift = recordState("drift") {
         Drift.checkRowcountDrift(rows, paths("rowcount_txt"), opts.driftThreshold)
       }
-      (results, drift.alert, rows)
+      (results, drift.alert)
     }(etlEc)
 
     // ---- collect with two-tier strictness (flow:162-171) ----
-    val (processedRows, jsonN, qaResults, driftAlert, rawRows) =
+    val (processedRows, processedSchema, qaResults, driftAlert) =
       try {
-        val (p, j) = Await.result(etl, Duration.Inf) // strict: propagate
-        val (qr, da, rr) = Try(Await.result(qa, Duration.Inf)) match {
+        val (p, ps) = Await.result(etl, Duration.Inf) // strict: propagate
+        val (qr, da) = Try(Await.result(qa, Duration.Inf)) match {
           case Success(v) => v
-          case Failure(e) if !opts.failOnQaError =>
-            (Map.empty[String, Try[String]], None, raw.count())
+          case Failure(e) if !opts.failOnQaError => (Map.empty[String, Try[String]], None)
           case Failure(e) => throw e
         }
         if (opts.failOnQaError)
           qr.collect { case (k, Failure(e)) => throw e }
-        (p, j, qr, da, rr)
+        (p, ps, qr, da)
       } finally qaEc.shutdown()
 
     val durationS = (System.nanoTime() - t0) / 1e9
     val report = RunReport(
       objectName, runId, rawPath, paths("processed_csv"), paths("output_json"),
       qaResults.collect { case (k, Success(p)) => k -> p },
-      states.toMap, driftAlert, rawRows, processedRows, jsonN, durationS)
+      states.toMap, driftAlert, rawRows, processedRows, processedRows, durationS,
+      raw.schema, processedSchema)
 
     recordMetadata(spark, report, paths, opts.rawFormat)
     report
   }
 
   /** Daemon threads: the pools must never pin the JVM open after main
-    * completes (a non-daemon leftover pool hangs `runMain` forever). */
+    * completes (a non-daemon leftover pool hangs `runMain` forever).
+    * They inherit no thread-locals: Spark's local properties (job
+    * description, job group) are inheritable, and a pool thread would
+    * otherwise keep the first submitter's copy for every later run. */
   private val daemonFactory: java.util.concurrent.ThreadFactory =
     (r: Runnable) => {
-      val t = new Thread(r)
+      val t = new Thread(null, r, "graft-orchestrator", 0L, false)
       t.setDaemon(true)
       t
     }
+
+  private val JobDescription = "spark.job.description"
+
+  /** Runs `body` with its Spark jobs labelled `label` (the job
+    * description, a property of the calling thread), then restores the
+    * thread's previous label. */
+  private def labelled[T](spark: SparkSession, label: String)(body: => T): T = {
+    val sc = spark.sparkContext
+    val previous = sc.getLocalProperty(JobDescription)
+    sc.setLocalProperty(JobDescription, label)
+    try body
+    finally sc.setLocalProperty(JobDescription, previous)
+  }
 
   private lazy val etlEc: ExecutionContext =
     ExecutionContext.fromExecutorService(Executors.newFixedThreadPool(2, daemonFactory))
@@ -314,17 +366,18 @@ object Orchestrator {
     * (`tasks/metadata.py:35-42,195-197`). */
   def recordMetadata(
       spark: SparkSession, report: RunReport, paths: Map[String, String],
-      rawFormat: String = "parquet"): Unit = {
+      rawFormat: String = "parquet"): Unit = labelled(spark, "recordMetadata") {
     def safeCount(f: => Long): Long = Try(f).getOrElse(-1L)
     val rawCount =
       if (rawFormat == "csv")
         safeCount(spark.read.option("header", "true").option("multiLine", "true")
           .csv(report.rawPath).count())
-      else safeCount(spark.read.parquet(report.rawPath).count())
+      else safeCount(spark.read.schema(report.rawSchema).parquet(report.rawPath).count())
     // multiLine here too: a quoted embedded newline in a group-key value
     // must count as one row, consistent with the raw recount and Scan.csv.
     val processedCount = safeCount(
-      spark.read.option("header", "true").option("multiLine", "true")
+      spark.read.schema(report.processedSchema)
+        .option("header", "true").option("multiLine", "true")
         .csv(report.processedCsv).count())
     // The JSON artifact is a single records ARRAY (K2) — aggregate-sized
     // by construction, so a driver parse is O(groups), not a data path.

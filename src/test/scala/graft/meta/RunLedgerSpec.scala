@@ -37,6 +37,34 @@ class RunLedgerSpec extends AnyFunSuite {
     assert((r1 \ "n") == JInt(3))
   }
 
+  test("dedupeKeepLast leaves a file with nothing to drop byte-identical, unwritten") {
+    val p = tmp().resolve("runs.jsonl")
+    val body = """{"run_id":"r1","nested":{"run_id":"r2"},"n":[1,{"x":"y"}]}""" + "\n" +
+      """{"n":4}""" + "\n" + """{"run_id":"","n":5}""" + "\n" + """{"run_id":"r2"}""" + "\n"
+    Files.write(p, body.getBytes("UTF-8"))
+    val epoch = java.nio.file.attribute.FileTime.fromMillis(0L)
+    Files.setLastModifiedTime(p, epoch)
+    assert(RunLedger.dedupeKeepLast(p.toString) == 0)
+    assert(new String(Files.readAllBytes(p), "UTF-8") == body)
+    assert(Files.getLastModifiedTime(p) == epoch) // no rewrite happened
+  }
+
+  test("dedupeKeepLast still removes blank lines, and only malformed or ambiguous ids are kept") {
+    val p = tmp().resolve("runs.jsonl")
+    Files.write(p, Seq(
+      """{"run_id":"a","n":1}""", "", """{"run_id":"a","n":2}""", "   ",
+      """{"run_id":"b","run_id":"b"}""", """{"run_id":"b","run_id":"b"}""", // duplicate key: no id
+      """{"run_id":7}""", """{"run_id":7}""", // not a string: no id
+      """{"run_id":"c" broken""", """{"run_id":"c" broken""" // not JSON: no id
+    ).mkString("\n").getBytes("UTF-8"))
+    assert(RunLedger.dedupeKeepLast(p.toString) == 1)
+    assert(new String(Files.readAllBytes(p), "UTF-8") == Seq(
+      """{"run_id":"a","n":2}""",
+      """{"run_id":"b","run_id":"b"}""", """{"run_id":"b","run_id":"b"}""",
+      """{"run_id":7}""", """{"run_id":7}""",
+      """{"run_id":"c" broken""", """{"run_id":"c" broken""").mkString("", "\n", "\n"))
+  }
+
   test("rotation shifts backups at size threshold") {
     val dir = tmp()
     val p = dir.resolve("runs.jsonl").toString

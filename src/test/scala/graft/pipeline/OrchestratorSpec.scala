@@ -190,6 +190,77 @@ class OrchestratorSpec extends SparkSpec {
     assert(lastCounts()._1 == BigInt(-1))
   }
 
+  /** Description of every job `body` launches, in job order. */
+  private def jobLabels(body: => Unit): Seq[String] = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val seen = new java.util.concurrent.ConcurrentSkipListMap[Int, String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        seen.put(e.jobId, Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.description"))).getOrElse(""))
+    }
+    org.apache.spark.ListenerBusAccess.drain(sc)
+    sc.addSparkListener(listener)
+    try {
+      body
+      org.apache.spark.ListenerBusAccess.drain(sc)
+    } finally sc.removeSparkListener(listener)
+    import scala.jdk.CollectionConverters._
+    seen.values().asScala.toSeq
+  }
+
+  test("every job of a run carries its task's label; the caller's label survives") {
+    val base = Files.createTempDirectory("orchLabels").toString
+    val sc = spark.sparkContext
+    sc.setJobDescription("caller label")
+    try {
+      val labels = jobLabels(Orchestrator.run(spark, "Order", source, base,
+        Orchestrator.RunOptions(limit = None, timestampRaw = false),
+        specOverride = Some(orderSpec)))
+      val tasks = Set("extract", "process", "load_json", "dedup", "profile",
+        "snapshot_parquet", "recordMetadata")
+      assert(labels.toSet == tasks, labels)
+      assert(sc.getLocalProperty("spark.job.description") == "caller label")
+    } finally sc.setJobDescription(null)
+  }
+
+  test("job budget: one parquet-mode run of a 4-row source launches 19 jobs") {
+    // Counted per task label; a two-stage plan is two jobs under adaptive
+    // execution. load_json keeps the reference's schema-inferring re-read
+    // of the processed CSV (2 inference jobs + its empty test + the
+    // collect); recordMetadata's recounts read the artifacts on disk with
+    // known schemas (2 × count). An inference read or a recount added
+    // back shows up here.
+    val base = Files.createTempDirectory("orchBudget").toString
+    val opts = Orchestrator.RunOptions(limit = None, timestampRaw = false)
+    Orchestrator.run(spark, "Order", source, base, opts, specOverride = Some(orderSpec))
+    val labels = jobLabels(Orchestrator.run(spark, "Order", source, base, opts,
+      specOverride = Some(orderSpec)))
+    val perTask = labels.groupBy(identity).map { case (k, v) => k -> v.size }
+    assert(perTask == Map("extract" -> 1, "process" -> 4, "load_json" -> 4, "dedup" -> 2,
+      "profile" -> 3, "snapshot_parquet" -> 1, "recordMetadata" -> 4), perTask)
+    assert(labels.size == 19)
+  }
+
+  test("an empty extract: gate fails advisory, spec-derived empty summary, zero recounts") {
+    import org.json4s._
+    Seq("parquet", "csv").foreach { medium =>
+      val base = Files.createTempDirectory(s"orchEmpty_$medium").toString
+      val report = Orchestrator.run(spark, "Order", source.limit(0), base,
+        Orchestrator.RunOptions(limit = None, timestampRaw = false, rawFormat = medium),
+        specOverride = Some(orderSpec))
+      assert(report.rawRows == 0, medium)
+      assert(report.taskStates.get("precheck_nonempty").contains("FAILED"), medium)
+      assert(report.taskStates.get("process").contains("COMPLETED"), medium)
+      assert(report.processedRows == 0 && report.jsonRecords == 0, medium)
+      val rec = RunLedger.read(s"$base/meta/runs.jsonl").last
+      assert((rec \ "raw_rows_recounted") == JInt(0), s"$medium: $rec")
+      assert((rec \ "processed_rows_recounted") == JInt(0), s"$medium: $rec")
+      assert((rec \ "json_records") == JInt(0), s"$medium: $rec")
+    }
+  }
+
   test("limit is applied at extract (source-pushed P3)") {
     val base = Files.createTempDirectory("orch3").toString
     val report = Orchestrator.run(spark, "Order", source, base,
